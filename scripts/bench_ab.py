@@ -15,11 +15,17 @@ Options:
 Round 9 burned four full-board runs and four hand-written hostcheck
 files adjudicating a 14% monotone host drift. This script automates that
 protocol: materialize the base ref in a git worktree, then time the
-flagged queries through graft.Scratch ALTERNATELY on base and HEAD in
-ONE window. Cross-window deltas confound code with host state; a
-same-window interleaved ratio does not. Each timed invocation runs
+flagged queries through graft.Scratch (the one per-query dev harness)
+ALTERNATELY on base and HEAD in ONE window. Cross-window deltas confound
+code with host state; a same-window interleaved ratio does not. Each timed invocation runs
 REPS=2 and keeps only the warm second rep (both sides pay first-run
 codegen/JIT equally and it is discarded equally).
+
+Only the `[scratch] run<N> <query>: <sec> s` prefix of a Scratch rep line
+is read (SCRATCH_RE). Scratch has appended listener fields after it
+(` run=… cpu=…`, later jobs/stages/tasks/shuffle/spill) and may append
+more; the prefix is the contract that lets HEAD be timed against a base
+ref from before any of them (scripts/test_bench_ab.py pins it).
 
 The artifact records per-query base/head runs, medians, and the ratio,
 plus a mechanical verdict per query:
@@ -42,6 +48,13 @@ def sh(cmd, cwd=REPO, env=None):
                           capture_output=True, text=True)
 
 
+def parse_scratch(stdout):
+    """{query: seconds} from Scratch's stdout; later reps overwrite
+    earlier ones, so the warm last rep survives."""
+    return {m.group(2): float(m.group(3))
+            for m in SCRATCH_RE.finditer(stdout)}
+
+
 def scratch(workdir, queries, sf_dir, reps):
     """Run graft.Scratch in `workdir`; return {query: last-rep seconds}."""
     import os
@@ -54,10 +67,7 @@ def scratch(workdir, queries, sf_dir, reps):
     if r.returncode != 0:
         sys.stderr.write(r.stdout[-2000:] + r.stderr[-2000:])
         raise SystemExit(f"Scratch failed in {workdir}")
-    out = {}
-    for m in SCRATCH_RE.finditer(r.stdout):
-        # later reps overwrite earlier ones -> the warm last rep survives
-        out[m.group(2)] = float(m.group(3))
+    out = parse_scratch(r.stdout)
     missing = set(queries) - set(out)
     if missing:
         raise SystemExit(f"{workdir}: no timing for {sorted(missing)}")

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place that knows the session configuration every graft entrypoint
-  * (Bench / Verify / Smoke / Plans / Scratch / specs) needs. Nothing in the
+  * needs: [[builder]] for Verify / Smoke / Plans / specs / perfbench, and
+  * [[boardBuilder]] (builder plus the board's split emulation) for Bench
+  * and the Scratch dev harness. Nothing in the
   * query code mutates session conf at runtime — configs that change how
   * storage is *read* (like parquet NANOS handling) belong at session build,
   * where they apply uniformly to planning AND execution, instead of leaking
@@ -39,8 +41,7 @@ object GraftSession {
     // index per map task). At cluster scale (partitions ≫ 200) the
     // bypass never engages, so this also makes local plans exercise the
     // same writer a production shuffle uses.
-    "spark.shuffle.sort.bypassMergeThreshold" ->
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS", "1")
+    "spark.shuffle.sort.bypassMergeThreshold" -> "1"
   )
 
   def builder(master: String, shufflePartitions: String): SparkSession.Builder = {
@@ -50,5 +51,30 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     requiredConfigs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+  }
+
+  /** Bench's split emulation. The fixture tables are ONE parquet file each
+    * (lineitem sf0.1 ≈ 11 MB), and the default 4 MB open-cost floor yields
+    * ~3 input splits — scan-bound aggregations then run near-serial. A
+    * real table at cluster scale is thousands of files; the first two
+    * knobs emulate that split count locally so the board measures the
+    * operator, not a single-file artifact. (Production keeps the 128 MB
+    * default — more splits there would mean millions of tasks.) The
+    * default codegen cache is 100 compiled classes; the board needs
+    * several hundred, so the warmup pass's classes would be evicted before
+    * the timed pass reuses them (re-paying janino compilation inside
+    * timed queries). */
+  val boardConfigs: Map[String, String] = Map(
+    "spark.sql.files.maxPartitionBytes" -> "1m",
+    "spark.sql.files.openCostInBytes" -> "131072",
+    "spark.sql.codegenCacheMaxEntries" -> "5000")
+
+  /** The board session Bench times and Scratch reproduces:
+    * `local[SPARK_GRAFT_CPUS]` (default 32) with as many shuffle
+    * partitions, plus [[boardConfigs]]. */
+  def boardBuilder(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    boardConfigs.foldLeft(builder(s"local[$cpus]", cpus)) {
+      case (b, (k, v)) => b.config(k, v) }
   }
 }

@@ -78,12 +78,24 @@ object StreamingQueries {
       r.getAs[java.sql.Timestamp]("ts").getTime + 1) / 2
   }
 
+  /** Move a written part file to its chunk target. The local FileSystem's
+    * rename silently replaces an existing file (and moves INTO an existing
+    * directory), so an occupied target is refused up front; either way a
+    * chunk that did not land at its target fails here instead of leaving
+    * the stream with a chunk file missing. */
+  private def publish(fs: org.apache.hadoop.fs.FileSystem, part: Path,
+                      tgt: Path): Unit = {
+    fs.mkdirs(tgt.getParent)
+    require(!fs.exists(tgt) && fs.rename(part, tgt),
+      s"chunk file publish failed: $tgt already exists or rename failed")
+  }
+
   /** Write `df` as exactly one parquet FILE at `target` with a pinned
     * modification time — the file source processes files in mod-time
     * order, so arrival order is data the test controls, not an accident
     * of write latency. */
-  private def writeOneFile(s: SparkSession, df: DataFrame, target: String,
-                           mtime: Long): Unit = {
+  private[graft] def writeOneFile(s: SparkSession, df: DataFrame,
+                                  target: String, mtime: Long): Unit = {
     val tgt = new Path(target)
     val fs = tgt.getFileSystem(s.sparkContext.hadoopConfiguration)
     val tmp = new Path(target + "_tmp")
@@ -91,8 +103,7 @@ object StreamingQueries {
     val part = fs.listStatus(tmp).map(_.getPath)
       .find(_.getName.startsWith("part-"))
       .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-    fs.mkdirs(tgt.getParent)
-    fs.rename(part, tgt)
+    publish(fs, part, tgt)
     fs.delete(tmp, true)
     fs.setTimes(tgt, mtime, -1)
   }
@@ -108,8 +119,8 @@ object StreamingQueries {
     * ORDER inside a chunk file is shuffle-nondeterministic, which is
     * immaterial: every downstream stateful operator re-shuffles by key
     * before ordering, so within-batch arrival order was never data. */
-  private def writeChunkFiles(s: SparkSession,
-                              chunks: Seq[(DataFrame, String, Long)]): Unit = {
+  private[graft] def writeChunkFiles(s: SparkSession,
+      chunks: Seq[(DataFrame, String, Long)]): Unit = {
     require(chunks.nonEmpty)
     val tagged = chunks.zipWithIndex.map { case ((df, _, _), k) =>
       df.withColumn("__k", lit(k)) }.reduce(_ unionByName _)
@@ -119,14 +130,14 @@ object StreamingQueries {
     val root = new Path(tmpRoot)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     chunks.zipWithIndex.foreach { case ((_, target, mtime), k) =>
+      // partitionBy writes no directory for an index without rows
       val dir = new Path(tmpRoot, s"__k=$k")
-      val part = fs.listStatus(dir).map(_.getPath)
-        .find(_.getName.startsWith("part-"))
+      val part = Option.when(fs.exists(dir))(fs.listStatus(dir)).toSeq
+        .flatten.map(_.getPath).find(_.getName.startsWith("part-"))
         .getOrElse(throw new IllegalStateException(
           s"no part file under $dir — empty chunk $k?"))
       val tgt = new Path(target)
-      fs.mkdirs(tgt.getParent)
-      fs.rename(part, tgt)
+      publish(fs, part, tgt)
       fs.setTimes(tgt, mtime, -1)
     }
     fs.delete(root, true)
