@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** One place that knows the session configuration every graft entrypoint
   * needs: [[builder]] for Verify / Smoke / Plans / specs / perfbench, and
-  * [[boardBuilder]] (builder plus the board's split emulation) for Bench
-  * and the Scratch dev harness. Nothing in the
+  * [[boardBuilder]] (builder plus the board's split emulation) for Bench,
+  * the Scratch dev harness and ScaleProbe. Nothing in the
   * query code mutates session conf at runtime — configs that change how
   * storage is *read* (like parquet NANOS handling) belong at session build,
   * where they apply uniformly to planning AND execution, instead of leaking

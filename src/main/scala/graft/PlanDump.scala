@@ -14,6 +14,9 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2).toSeq
+    // 4 partitions, not the board session: the committed plans/rNN/
+    // artifacts were captured at this width, and a new capture must diff
+    // against them
     val spark = GraftSession.builder("local[4]", "4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.maxMetadataStringLength", "1000")

@@ -51,7 +51,13 @@ object Parity {
     * bitwise). Headroom: |Σx|·100 must stay < 2^63 — callers document the
     * per-group bound. Squares of quantized values (q*q = 10^4·x², exact
     * for 2-decimal x) serve the variance/HHI family the same way. */
-  def lq(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")
+  def lq(c: Column): Column = q(c, 100.0)
+  /** Round-half-up long quantization to a `1/scale` grid,
+    * `floor(c·scale + 0.5)`: the trainer rows' output grids (1e6, 1e7,
+    * 1e9). The oracle spells the same tree as
+    * `CAST(floor(x * 1e9 + 0.5e0) AS BIGINT)`. */
+  def q(c: Column, scale: Double): Column =
+    floor(c * scale + 0.5).cast("long")
   /** Oracle-side text for [[lq]]. */
   def oLq(x: String): String =
     s"CAST(floor($x * 100.0 + 0.5) AS BIGINT)"
@@ -75,6 +81,23 @@ object Parity {
     s"(CAST(SUM($q) AS DOUBLE) / 100.0) * (CAST(SUM($q) AS DOUBLE) / 100.0)" +
     s" / CAST(COUNT($x) AS DOUBLE)) / (CAST(COUNT($x) AS DOUBLE) - 1.0))"
   }
+  /** 3×3 determinant by first-row cofactor expansion,
+    * `a1·(b2·c3 − b3·c2) − a2·(b1·c3 − b3·c1) + a3·(b1·c2 − b2·c1)`.
+    * [[det3]] (Column) and [[oDet3]] (oracle SQL text) are the one
+    * operation order both engines replay in every Cramer solve of the
+    * trainer rows, so the determinants round identically. */
+  def det3(a1: Column, a2: Column, a3: Column,
+           b1: Column, b2: Column, b3: Column,
+           c1: Column, c2: Column, c3: Column): Column =
+    a1 * (b2 * c3 - b3 * c2) -
+    a2 * (b1 * c3 - b3 * c1) +
+    a3 * (b1 * c2 - b2 * c1)
+  def oDet3(a1: String, a2: String, a3: String,
+            b1: String, b2: String, b3: String,
+            c1: String, c2: String, c3: String): String =
+    s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
+    s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
+    s"$a3 * ($b1 * $c2 - $b2 * $c1))"
   /** Oracle-side text for [[dsum]]. */
   def oSum(x: String, scale: Int = 6): String =
     s"CAST(SUM(CAST($x AS DECIMAL(30,$scale))) AS DOUBLE)"

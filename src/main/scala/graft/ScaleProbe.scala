@@ -31,6 +31,10 @@ import org.apache.spark.sql.functions._
   * most-expensive-data-bound set run. Rows are flagged only when ratio >
   * 2N AND the replica run is slower than 2s — a 0.05s→1.5s row is
   * constant-dominated, not a scale term.
+  *
+  * Runs on Bench's board session ([[GraftSession.boardBuilder]]:
+  * `local[SPARK_GRAFT_CPUS]`, default 32, with the split emulation), so
+  * its timings are the board's.
   */
 object ScaleProbe {
 
@@ -55,7 +59,7 @@ object ScaleProbe {
         case q => rest += q; i += 1
       }
     }
-    val spark = GraftSession.builder("local[32]", "32").getOrCreate()
+    val spark = GraftSession.boardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val explicit = rest.result()
     val queries =

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
@@ -18,9 +19,9 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType}
   * [[graft.operators.Ewm.recursive]], which it matches bit-for-bit; see
   * `EwmNativeSpec`). Null inputs keep the previous state, like pandas.
   *
-  * SQL surface: `ewm_nr(x, alpha) OVER (PARTITION BY k ORDER BY ts)` after
-  * [[EwmNative.register]] (session registry) or via
-  * [[GraftExtensions]] (`spark.sql.extensions` config).
+  * SQL surface: `ewm_nr(x, alpha) OVER (PARTITION BY k ORDER BY ts)` in
+  * any session carrying [[GraftExtensions]] (`spark.sql.extensions`
+  * config; every [[graft.GraftSession]]).
   */
 case class EwmNr(child: Expression, alphaExpr: Expression)
     extends AggregateWindowFunction {
@@ -63,21 +64,6 @@ case class EwmNr(child: Expression, alphaExpr: Expression)
     copy(child = newChildren(0), alphaExpr = newChildren(1))
 }
 
-object EwmNative {
-  private val ident = FunctionIdentifier("ewm_nr")
-  private val info = new ExpressionInfo(classOf[EwmNr].getName, "ewm_nr")
-  private val builder: Seq[Expression] => Expression = {
-    case Seq(c, a) => EwmNr(c, a)
-    case other => throw new IllegalArgumentException(
-      s"ewm_nr expects 2 arguments, got ${other.size}")
-  }
-
-  /** Register on a live session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(ident, info, builder)
-}
-
 /** `spark.sql.extensions`-style injection — the standard deployment path:
   * `SparkSession.builder.withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
@@ -93,18 +79,18 @@ class GraftExtensions
       ShingleHash32.builder))
     // trainer inner loops as single expressions (planning-cost fusion;
     // arithmetic bit-identical to the unrolled projection chains)
-    ext.injectFunction((TrainerNative.sigmoidIdent,
-      TrainerNative.sigmoidInfo, TrainerNative.sigmoidBuilder))
     ext.injectFunction((TrainerNative.powerIdent,
       TrainerNative.powerInfo, TrainerNative.powerBuilder))
-    ext.injectFunction((TreeFitNative.ident, TreeFitNative.info,
-      TreeFitNative.builder))
-    ext.injectFunction((GbtFitNative.ident, GbtFitNative.info,
-      GbtFitNative.builder))
-    ext.injectFunction((LogitFitNative.ident, LogitFitNative.info,
-      LogitFitNative.builder))
-    ext.injectFunction((ForestFitNative.ident, ForestFitNative.info,
-      ForestFitNative.builder))
+    def fit[T <: FitAggregate](name: String, arity: Int,
+        ctor: Seq[Expression] => T)(implicit ct: ClassTag[T]): Unit =
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(ct.runtimeClass.getName, name),
+        { case cs if cs.length == arity => ctor(cs) }
+          : PartialFunction[Seq[Expression], Expression]))
+    fit("tree_fit3", 4, TreeFit3(_))
+    fit("gbt_fit4", 4, GbtFit4(_))
+    fit("logit_fit4", 4, LogitFit4(_))
+    fit("forest_fit8", 10, ForestFit8(_))
     // native HLL register aggregate (TypedImperativeAggregate tier)
     ext.injectFunction((
       FunctionIdentifier("hll_sketch_agg"),

@@ -2,11 +2,8 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -37,17 +34,10 @@ import org.apache.spark.sql.types._
   * pred_r_q, oob_auc, ens_auc) — one row per tree that split.
   */
 case class ForestFit8(
-    override val children: Seq[Expression],
+    children: Seq[Expression],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[ArrayBuffer[Array[Long]]] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.length == 10 && children.forall(_.dataType == LongType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "forest_fit8 expects 10 bigint columns " +
-        "(tree, feat, x1, x2, wn, wy, c0, p0, cnt, cy)")
+    extends FitAggregate {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("tree", LongType, nullable = false),
@@ -60,48 +50,9 @@ case class ForestFit8(
     StructField("oob_auc", DoubleType, nullable = true),
     StructField("ens_auc", DoubleType, nullable = true))),
     containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "forest_fit8"
 
-  override def createAggregationBuffer(): ArrayBuffer[Array[Long]] =
-    ArrayBuffer.empty
-
-  override def update(buf: ArrayBuffer[Array[Long]],
-                      input: InternalRow): ArrayBuffer[Array[Long]] = {
-    val vals = new Array[Long](10)
-    var i = 0
-    while (i < 10) {
-      val v = children(i).eval(input)
-      if (v == null) return buf
-      vals(i) = v.asInstanceOf[Long]
-      i += 1
-    }
-    buf += vals
-    buf
-  }
-
-  override def merge(buf: ArrayBuffer[Array[Long]],
-                     other: ArrayBuffer[Array[Long]]): ArrayBuffer[Array[Long]] = {
-    buf ++= other
-    buf
-  }
-
   override def eval(buf: ArrayBuffer[Array[Long]]): Any = {
-    def half(n: Long, p: Long): Double =
-      n.toDouble - ((p * p).toDouble + ((n - p) * (n - p)).toDouble) /
-        n.toDouble
-    def aucOf(hist: java.util.TreeMap[java.lang.Long, Array[Long]]): Any = {
-      var cumneg = 0L; var num2 = 0L; var np = 0L; var nn = 0L
-      val it = hist.values().iterator()
-      while (it.hasNext) {
-        val slot = it.next()
-        num2 += slot(0) * (2L * cumneg + slot(1))
-        np += slot(0); nn += slot(1)
-        cumneg += slot(1)
-      }
-      if (2L * np * nn == 0L) null
-      else num2.toDouble / (2L * np * nn).toDouble
-    }
     // cell fields: 0=tree 1=feat 2=x1 3=x2 4=wn 5=wy 6=c0 7=p0 8=cnt 9=cy
     val cells = buf.toArray
     val byTree = cells.indices.groupBy(i => cells(i)(0))
@@ -171,7 +122,7 @@ case class ForestFit8(
           e(0) += sq
         }
         picks += ((tree, feat, bThr, ntot, postot, bPredL, bPredR,
-          aucOf(oobHist)))
+          aucRankSum(oobHist)))
       }
     }
     if (picks.isEmpty) return new GenericArrayData(Array.empty[Any])
@@ -189,29 +140,10 @@ case class ForestFit8(
         slot(1) += b(0) - b(1)  // cnt - cy
       }
     }
-    val ensAuc = aucOf(ensHist)
+    val ensAuc = aucRankSum(ensHist)
     new GenericArrayData(picks.map { case (t, fe, th, n, p, pl, pr, oob) =>
       InternalRow(t, fe, th, n, p, pl, pr, oob, ensAuc)
     }.toArray[Any])
-  }
-
-  override def serialize(buf: ArrayBuffer[Array[Long]]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + buf.length * 80)
-    bb.putInt(buf.length)
-    buf.foreach(c => c.foreach(bb.putLong))
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[Array[Long]] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = ArrayBuffer.empty[Array[Long]]
-    var i = 0
-    while (i < n) {
-      buf += Array.fill(10)(bb.getLong)
-      i += 1
-    }
-    buf
   }
 
   override def withNewMutableAggBufferOffset(n: Int): ForestFit8 =
@@ -221,13 +153,4 @@ case class ForestFit8(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ForestFit8 =
     copy(children = newChildren)
-}
-
-object ForestFitNative {
-  val ident: FunctionIdentifier = FunctionIdentifier("forest_fit8")
-  val info: ExpressionInfo =
-    new ExpressionInfo(classOf[ForestFit8].getName, "forest_fit8")
-  val builder: PartialFunction[Seq[Expression], Expression] = {
-    case cs if cs.length == 10 => ForestFit8(cs)
-  }
 }

@@ -2,11 +2,8 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -23,7 +20,7 @@ import org.apache.spark.sql.types._
   *
   * Parity contract (bit-exact replay of the projection formulation,
   * whose unrolled CTEs the DuckDB oracle still runs):
-  *  - p = sigmoid_r16(f) (TrainerNative.sigmoidR16 — the identical
+  *  - p = TrainerNative.sigmoidR16(f) (the identical
   *    16-squaring sequence), gq/hq floor-quantized to the 1e-9 grid
   *    exactly as the column expressions cast them;
   *  - per-feature value histograms summed as exact longs, candidates at
@@ -45,17 +42,10 @@ import org.apache.spark.sql.types._
   * auc_train) — one row per round that found a split.
   */
 case class GbtFit4(
-    x1e: Expression, x2e: Expression, ne: Expression, yce: Expression,
+    children: Seq[Expression],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[ArrayBuffer[Array[Long]]] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == LongType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "gbt_fit4 expects 4 bigint columns (x1, x2, n, yc), got " +
-        children.map(_.dataType.simpleString).mkString(", "))
+    extends FitAggregate {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("round", LongType, nullable = false),
@@ -66,28 +56,7 @@ case class GbtFit4(
     StructField("gain_q", LongType, nullable = false),
     StructField("auc_train", DoubleType, nullable = true))),
     containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(x1e, x2e, ne, yce)
   override def prettyName: String = "gbt_fit4"
-
-  override def createAggregationBuffer(): ArrayBuffer[Array[Long]] =
-    ArrayBuffer.empty
-
-  override def update(buf: ArrayBuffer[Array[Long]],
-                      input: InternalRow): ArrayBuffer[Array[Long]] = {
-    val (a, b, c, d) =
-      (x1e.eval(input), x2e.eval(input), ne.eval(input), yce.eval(input))
-    if (a != null && b != null && c != null && d != null)
-      buf += Array(a.asInstanceOf[Long], b.asInstanceOf[Long],
-        c.asInstanceOf[Long], d.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: ArrayBuffer[Array[Long]],
-                     other: ArrayBuffer[Array[Long]]): ArrayBuffer[Array[Long]] = {
-    buf ++= other
-    buf
-  }
 
   override def eval(buf: ArrayBuffer[Array[Long]]): Any = {
     val cells = buf.toArray
@@ -166,17 +135,7 @@ case class GbtFit4(
           slot(1) += cells(j2)(2) - cells(j2)(3) // neg
           j2 += 1
         }
-        var cumneg = 0L; var num2 = 0L; var np = 0L; var nn = 0L
-        val it2 = sh.values().iterator()
-        while (it2.hasNext) {
-          val slot = it2.next()
-          num2 += slot(0) * (2L * cumneg + slot(1))
-          np += slot(0); nn += slot(1)
-          cumneg += slot(1)
-        }
-        val auc: Any =
-          if (2L * np * nn == 0L) null
-          else num2.toDouble / (2L * np * nn).toDouble
+        val auc = aucRankSum(sh)
         out += InternalRow(k.toLong, bFeat, bThr,
           math.floor(bDl * 1e9 + 0.5).toLong,
           math.floor(bDr * 1e9 + 0.5).toLong,
@@ -188,42 +147,11 @@ case class GbtFit4(
     new GenericArrayData(out.toArray[Any])
   }
 
-  override def serialize(buf: ArrayBuffer[Array[Long]]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + buf.length * 32)
-    bb.putInt(buf.length)
-    buf.foreach { c =>
-      bb.putLong(c(0)); bb.putLong(c(1)); bb.putLong(c(2)); bb.putLong(c(3))
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[Array[Long]] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = ArrayBuffer.empty[Array[Long]]
-    var i = 0
-    while (i < n) {
-      buf += Array(bb.getLong, bb.getLong, bb.getLong, bb.getLong)
-      i += 1
-    }
-    buf
-  }
-
   override def withNewMutableAggBufferOffset(n: Int): GbtFit4 =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): GbtFit4 =
     copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): GbtFit4 =
-    copy(x1e = newChildren(0), x2e = newChildren(1),
-      ne = newChildren(2), yce = newChildren(3))
-}
-
-object GbtFitNative {
-  val ident: FunctionIdentifier = FunctionIdentifier("gbt_fit4")
-  val info: ExpressionInfo =
-    new ExpressionInfo(classOf[GbtFit4].getName, "gbt_fit4")
-  val builder: PartialFunction[Seq[Expression], Expression] = {
-    case Seq(a, b, c, d) => GbtFit4(a, b, c, d)
-  }
+    copy(children = newChildren)
 }

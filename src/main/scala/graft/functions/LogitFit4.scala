@@ -2,17 +2,14 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** `logit_fit4(x1, x2, n, yc)` — mlprep_logit's four IRLS/Newton steps +
   * tie-correct train AUC as ONE typed aggregate per group (the
   * tree_fit3/gbt_fit4 doctrine). Each step replays the projection
-  * formulation's exact IEEE sequence: p = sigmoid_r16(z) with
+  * formulation's exact IEEE sequence: p = TrainerNative.sigmoidR16(z) with
   * z = (c0 + c1·x1) + c2·x2, p and n·p·(1−p) floor-quantized to the
   * 1e-9 grid, the nine Newton moments summed as exact longs, the 3×3
   * Cramer solve through the identical det3 double tree, β' = β + d/det.
@@ -25,17 +22,10 @@ import org.apache.spark.sql.types._
   * Output: struct(n, b0_q, b1_q, b2_q, auc_train) — one row per group.
   */
 case class LogitFit4(
-    x1e: Expression, x2e: Expression, ne: Expression, yce: Expression,
+    children: Seq[Expression],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[ArrayBuffer[Array[Long]]] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == LongType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "logit_fit4 expects 4 bigint columns (x1, x2, n, yc), got " +
-        children.map(_.dataType.simpleString).mkString(", "))
+    extends FitAggregate {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
@@ -43,28 +33,7 @@ case class LogitFit4(
     StructField("b1_q", LongType, nullable = false),
     StructField("b2_q", LongType, nullable = false),
     StructField("auc_train", DoubleType, nullable = true)))
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(x1e, x2e, ne, yce)
   override def prettyName: String = "logit_fit4"
-
-  override def createAggregationBuffer(): ArrayBuffer[Array[Long]] =
-    ArrayBuffer.empty
-
-  override def update(buf: ArrayBuffer[Array[Long]],
-                      input: InternalRow): ArrayBuffer[Array[Long]] = {
-    val (a, b, c, d) =
-      (x1e.eval(input), x2e.eval(input), ne.eval(input), yce.eval(input))
-    if (a != null && b != null && c != null && d != null)
-      buf += Array(a.asInstanceOf[Long], b.asInstanceOf[Long],
-        c.asInstanceOf[Long], d.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: ArrayBuffer[Array[Long]],
-                     other: ArrayBuffer[Array[Long]]): ArrayBuffer[Array[Long]] = {
-    buf ++= other
-    buf
-  }
 
   override def eval(buf: ArrayBuffer[Array[Long]]): Any = {
     // det3 in the projection tree's exact operation order
@@ -120,42 +89,11 @@ case class LogitFit4(
       nTot += cells(i)(2)
       i += 1
     }
-    var cumneg = 0L; var num2 = 0L; var np = 0L; var nn = 0L
-    val it = sh.values().iterator()
-    while (it.hasNext) {
-      val slot = it.next()
-      num2 += slot(0) * (2L * cumneg + slot(1))
-      np += slot(0); nn += slot(1)
-      cumneg += slot(1)
-    }
-    val auc: Any =
-      if (2L * np * nn == 0L) null
-      else num2.toDouble / (2L * np * nn).toDouble
+    val auc = aucRankSum(sh)
     InternalRow(nTot,
       math.floor(c0 * 1e9 + 0.5).toLong,
       math.floor(c1 * 1e9 + 0.5).toLong,
       math.floor(c2 * 1e9 + 0.5).toLong, auc)
-  }
-
-  override def serialize(buf: ArrayBuffer[Array[Long]]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + buf.length * 32)
-    bb.putInt(buf.length)
-    buf.foreach { c =>
-      bb.putLong(c(0)); bb.putLong(c(1)); bb.putLong(c(2)); bb.putLong(c(3))
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[Array[Long]] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = ArrayBuffer.empty[Array[Long]]
-    var i = 0
-    while (i < n) {
-      buf += Array(bb.getLong, bb.getLong, bb.getLong, bb.getLong)
-      i += 1
-    }
-    buf
   }
 
   override def withNewMutableAggBufferOffset(n: Int): LogitFit4 =
@@ -164,15 +102,5 @@ case class LogitFit4(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): LogitFit4 =
-    copy(x1e = newChildren(0), x2e = newChildren(1),
-      ne = newChildren(2), yce = newChildren(3))
-}
-
-object LogitFitNative {
-  val ident: FunctionIdentifier = FunctionIdentifier("logit_fit4")
-  val info: ExpressionInfo =
-    new ExpressionInfo(classOf[LogitFit4].getName, "logit_fit4")
-  val builder: PartialFunction[Seq[Expression], Expression] = {
-    case Seq(a, b, c, d) => LogitFit4(a, b, c, d)
-  }
+    copy(children = newChildren)
 }

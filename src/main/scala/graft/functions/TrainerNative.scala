@@ -1,14 +1,20 @@
 package graft.functions
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions for the trainer family's fixed-iteration
-  * inner loops (mlprep_logit / mlprep_gbt / mlprep_pca).
+/** Native trainer primitives: the deterministic sigmoid
+  * ([[TrainerNative.sigmoidR16]]) and power iteration ([[PowerIter3]],
+  * SQL `power_iter3`) of mlprep_logit / mlprep_gbt / mlprep_pca, and
+  * [[FitAggregate]], the shared base of the fused trainer aggregates
+  * (`logit_fit4`, `gbt_fit4`, `tree_fit3`, `forest_fit8`).
   *
   * Motivation is PLANNING cost, not row throughput: the engine's
   * deterministic sigmoid and power iteration were built as unrolled
@@ -16,41 +22,97 @@ import org.apache.spark.sql.types._
   * steps) so both engines replay one IEEE tree — correct, but Catalyst
   * re-analyzes the whole unrolled chain on every invocation, a constant
   * ~44s/board across the trainer rows (round-8 verdict; the 10× probe
-  * showed the cost is flat in data size). Each expression here computes
-  * the SAME IEEE operation sequence in one scalar/struct call, so the
-  * arithmetic — and therefore every CORRECTNESS hash — is bit-identical
-  * while the plan shrinks from dozens of projections to one.
+  * showed the cost is flat in data size). Each primitive here computes
+  * the SAME IEEE operation sequence in one call, so the arithmetic — and
+  * therefore every CORRECTNESS hash — is bit-identical while the plan
+  * shrinks from dozens of projections to one.
   *
   * The DuckDB oracles keep their unrolled CTE chains: the parity
   * contract is unchanged arithmetic, proven by unchanged hashes.
   */
 
-/** `sigmoid_r16(z)` — the engine's deterministic rational sigmoid:
-  * clamp z to ±30, then `1 / (1 + (1 − z/65536)^65536)` by 16 exact
-  * squarings (every step correctly rounded, so both engines agree
-  * bit-for-bit; `exp` would not be). Replicates the projection chain in
-  * mlprep_logit/mlprep_gbt exactly, including Spark's
-  * `greatest(least(z, 30), −30)` NaN semantics (NaN clamps to 30).
+/** Shared plumbing of the fused trainer aggregates. The state is the
+  * multiset of bigint input rows (one `Array[Long]` of `children.length`
+  * values per row); a row with a null in any input is skipped. Partial
+  * buffers merge by append, so each subclass's `eval` must iterate in a
+  * sorted order for its result not to depend on arrival order
+  * (FitAggregatesSpec drives every layout).
   */
-case class SigmoidR16(child: Expression) extends UnaryExpression {
+abstract class FitAggregate
+    extends TypedImperativeAggregate[ArrayBuffer[Array[Long]]] {
+
+  @transient private lazy val inputs: Array[Expression] = children.toArray
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
+    if (children.forall(_.dataType == LongType))
+      TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"sigmoid_r16 expects double, got ${child.dataType.simpleString}")
+      s"$prettyName expects ${children.length} bigint columns, got " +
+        children.map(_.dataType.simpleString).mkString(", "))
 
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sigmoid_r16"
+  override def nullable: Boolean = false
 
-  override def nullSafeEval(input: Any): Any =
-    TrainerNative.sigmoidR16(input.asInstanceOf[Double])
+  override def createAggregationBuffer(): ArrayBuffer[Array[Long]] =
+    ArrayBuffer.empty
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TrainerNative.sigmoidR16($c)")
+  override def update(buf: ArrayBuffer[Array[Long]],
+                      input: InternalRow): ArrayBuffer[Array[Long]] = {
+    val row = new Array[Long](inputs.length)
+    var i = 0
+    while (i < inputs.length) {
+      val v = inputs(i).eval(input)
+      if (v == null) return buf
+      row(i) = v.asInstanceOf[Long]
+      i += 1
+    }
+    buf += row
+  }
 
-  override protected def withNewChildInternal(
-      newChild: Expression): SigmoidR16 = copy(child = newChild)
+  override def merge(buf: ArrayBuffer[Array[Long]],
+                     other: ArrayBuffer[Array[Long]]): ArrayBuffer[Array[Long]] =
+    buf ++= other
+
+  override def serialize(buf: ArrayBuffer[Array[Long]]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4 + buf.length * 8 * children.length)
+    bb.putInt(buf.length)
+    buf.foreach(_.foreach(bb.putLong))
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): ArrayBuffer[Array[Long]] = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val n = bb.getInt
+    val w = children.length
+    val buf = ArrayBuffer.empty[Array[Long]]
+    var i = 0
+    while (i < n) {
+      buf += Array.fill(w)(bb.getLong)
+      i += 1
+    }
+    buf
+  }
+
+  /** The gini surrogate `n − (p² + (n−p)²)/n` in the projection chain's
+    * cast order: exact-long products, then doubles. */
+  protected def half(n: Long, p: Long): Double =
+    n.toDouble - ((p * p).toDouble + ((n - p) * (n - p)).toDouble) /
+      n.toDouble
+
+  /** Tie-correct AUC over a score histogram (slot = (pos, neg), keys
+    * ascending): the rank-sum pos·(2·cumneg + neg) in exact longs over
+    * 2·P·N, null when a class is empty (the oracle's NULLIF contract). */
+  protected def aucRankSum(hist: java.util.TreeMap[_, Array[Long]]): Any = {
+    var cumneg = 0L; var num2 = 0L; var np = 0L; var nn = 0L
+    val it = hist.values().iterator()
+    while (it.hasNext) {
+      val slot = it.next()
+      num2 += slot(0) * (2L * cumneg + slot(1))
+      np += slot(0); nn += slot(1)
+      cumneg += slot(1)
+    }
+    if (2L * np * nn == 0L) null
+    else num2.toDouble / (2L * np * nn).toDouble
+  }
 }
 
 /** `power_iter3(c11, c12, c13, c22, c23, c33)` — 48 power-iteration
@@ -101,7 +163,12 @@ case class PowerIter3(children: Seq[Expression]) extends Expression
 
 object TrainerNative {
 
-  /** The exact 16-squaring sigmoid; see [[SigmoidR16]]. */
+  /** The engine's deterministic rational sigmoid: clamp z to ±30, then
+    * `1 / (1 + (1 − z/65536)^65536)` by 16 exact squarings (every step
+    * correctly rounded, so both engines agree bit-for-bit; `exp` would
+    * not be). Replicates the projection chain the mlprep_logit /
+    * mlprep_gbt oracles run, including Spark's `greatest(least(z, 30),
+    * −30)` NaN semantics (NaN clamps to 30). */
   def sigmoidR16(z: Double): Double = {
     // greatest(least(z, 30), -30) with Spark's NaN-is-greatest ordering
     val zc = if (z.isNaN) 30.0 else math.max(math.min(z, 30.0), -30.0)
@@ -129,13 +196,6 @@ object TrainerNative {
     val w2 = c12 * v1 + c22 * v2 + c23 * v3
     val w3 = c13 * v1 + c23 * v2 + c33 * v3
     new GenericInternalRow(Array[Any](v1, v2, v3, w1, w2, w3))
-  }
-
-  val sigmoidIdent: FunctionIdentifier = FunctionIdentifier("sigmoid_r16")
-  val sigmoidInfo: ExpressionInfo =
-    new ExpressionInfo(classOf[SigmoidR16].getName, "sigmoid_r16")
-  val sigmoidBuilder: PartialFunction[Seq[Expression], Expression] = {
-    case Seq(z) => SigmoidR16(z)
   }
 
   val powerIdent: FunctionIdentifier = FunctionIdentifier("power_iter3")

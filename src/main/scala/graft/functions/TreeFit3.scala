@@ -2,11 +2,8 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -44,17 +41,10 @@ import org.apache.spark.sql.types._
   * feat/thr/score null.
   */
 case class TreeFit3(
-    x1e: Expression, x2e: Expression, ne: Expression, yce: Expression,
+    children: Seq[Expression],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[ArrayBuffer[Array[Long]]] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == LongType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "tree_fit3 expects 4 bigint columns (x1, x2, n, yc), got " +
-        children.map(_.dataType.simpleString).mkString(", "))
+    extends FitAggregate {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("level", LongType, nullable = false),
@@ -65,35 +55,9 @@ case class TreeFit3(
     StructField("pos", LongType, nullable = false),
     StructField("score", DoubleType, nullable = true))),
     containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(x1e, x2e, ne, yce)
   override def prettyName: String = "tree_fit3"
 
-  override def createAggregationBuffer(): ArrayBuffer[Array[Long]] =
-    ArrayBuffer.empty
-
-  override def update(buf: ArrayBuffer[Array[Long]],
-                      input: InternalRow): ArrayBuffer[Array[Long]] = {
-    val (a, b, c, d) =
-      (x1e.eval(input), x2e.eval(input), ne.eval(input), yce.eval(input))
-    if (a != null && b != null && c != null && d != null)
-      buf += Array(a.asInstanceOf[Long], b.asInstanceOf[Long],
-        c.asInstanceOf[Long], d.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: ArrayBuffer[Array[Long]],
-                     other: ArrayBuffer[Array[Long]]): ArrayBuffer[Array[Long]] = {
-    buf ++= other
-    buf
-  }
-
   override def eval(buf: ArrayBuffer[Array[Long]]): Any = {
-    // the projection chain's gini surrogate, identical cast order:
-    // n − (p·p + (n−p)·(n−p)) / n with exact-long products
-    def half(n: Long, p: Long): Double =
-      n.toDouble - ((p * p).toDouble + ((n - p) * (n - p)).toDouble) /
-        n.toDouble
     // (cellIdx -> node); cells are (x1, x2, n, yc)
     val cells = buf.toArray
     val node = Array.fill(cells.length)(0L)
@@ -160,42 +124,11 @@ case class TreeFit3(
     new GenericArrayData(out.toArray[Any])
   }
 
-  override def serialize(buf: ArrayBuffer[Array[Long]]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + buf.length * 32)
-    bb.putInt(buf.length)
-    buf.foreach { c =>
-      bb.putLong(c(0)); bb.putLong(c(1)); bb.putLong(c(2)); bb.putLong(c(3))
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[Array[Long]] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = ArrayBuffer.empty[Array[Long]]
-    var i = 0
-    while (i < n) {
-      buf += Array(bb.getLong, bb.getLong, bb.getLong, bb.getLong)
-      i += 1
-    }
-    buf
-  }
-
   override def withNewMutableAggBufferOffset(n: Int): TreeFit3 =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): TreeFit3 =
     copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): TreeFit3 =
-    copy(x1e = newChildren(0), x2e = newChildren(1),
-      ne = newChildren(2), yce = newChildren(3))
-}
-
-object TreeFitNative {
-  val ident: FunctionIdentifier = FunctionIdentifier("tree_fit3")
-  val info: ExpressionInfo =
-    new ExpressionInfo(classOf[TreeFit3].getName, "tree_fit3")
-  val builder: PartialFunction[Seq[Expression], Expression] = {
-    case Seq(a, b, c, d) => TreeFit3(a, b, c, d)
-  }
+    copy(children = newChildren)
 }

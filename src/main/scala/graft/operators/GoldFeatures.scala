@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Parity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,15 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object GoldFeatures {
 
-  /** Whole-unit long quantization of the 2-decimal `value` domain (the
-    * Parity.lq pattern): volume sums ride exact integer hundredths on
-    * primitive long hash-aggs and de-scale once. Headroom: q ≤ 4e4/row;
-    * the squared candle-volume sums (pm_vol_sq_sum) need c_volq < 3e9,
-    * i.e. < 3e7 volume units per (user, hour) candle — far above any
-    * realistic per-candle figure, and the bound is documented here
-    * because it is the tightest in the battery. */
-  private def lqv(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")
-
   /** Holidays covering the fixture range (USFederalHolidayCalendar over
     * [data min, data max] — reference my_stock_functions.py:513).
     * Sourced from the committed calendar fixture via
@@ -62,19 +54,23 @@ object GoldFeatures {
 
     // hourly candles (the per-candle level for wick ratios / pm vwap);
     // volume kept as the exact long c_volq, with the double c_vol derived
-    // once for the expressions that need it (same IEEE tree both engines)
+    // once for the expressions that need it (same IEEE tree both engines).
+    // Volume sums ride Parity.lq's exact integer hundredths. Headroom:
+    // q ≤ 4e4/row; the squared candle-volume sums (pm_vol_sq_sum) need
+    // c_volq < 3e9, i.e. < 3e7 volume units per (user, hour) candle —
+    // far above any realistic per-candle figure, and the bound is noted
+    // here because it is the tightest in the battery.
     val candles = ev
       .groupBy(col("user_id"), col("day"),
                date_trunc("hour", col("ts")).as("slot"))
       .agg(min_by(col("value"), col("ts")).as("c_open"),
            max_by(col("value"), col("ts")).as("c_close"),
            max("value").as("c_high"), min("value").as("c_low"),
-           sum(lqv(col("value"))).as("c_volq"), count(lit(1)).as("c_n"))
+           sum(Parity.lq(col("value"))).as("c_volq"), count(lit(1)).as("c_n"))
       .withColumn("c_vol", col("c_volq").cast("double") / 100.0)
       .withColumn("pm", hour(col("slot")) < 9)
     // per-candle wick ratios (0 when the candle has no range), quantized
     // to a 1e9 grid so the daily MEAN is an exact integer sum.
-    def q9(c: Column): Column = floor(c * 1e9 + 0.5).cast("long")
     val range = col("c_high") - col("c_low")
     val upper = when(range === 0.0, 0.0)
       .otherwise((col("c_high") - greatest(col("c_open"), col("c_close"))) / range)
@@ -85,7 +81,8 @@ object GoldFeatures {
     val vwapTerm = floor(col("c_vol") * col("c_vol") / col("c_n") * 1e6 + 0.5)
       .cast("long")
     val candleDaily = candles
-      .withColumn("uq", q9(upper)).withColumn("lq", q9(lower))
+      .withColumn("uq", Parity.q(upper, 1e9))
+      .withColumn("lq", Parity.q(lower, 1e9))
       .withColumn("vt", when(col("pm"), vwapTerm))
       .groupBy("user_id", "day")
       .agg(sum("uq").as("uq_sum"), sum("lq").as("lq_sum"),
@@ -104,7 +101,7 @@ object GoldFeatures {
       .agg(min_by(col("value"), col("ts")).as("d_first"),
            max_by(col("value"), col("ts")).as("d_last"),
            max("value").as("d_high"), min("value").as("d_low"),
-           (sum(lqv(col("value"))).cast("double") / 100.0).as("d_vol"),
+           (sum(Parity.lq(col("value"))).cast("double") / 100.0).as("d_vol"),
            count(lit(1)).as("d_n"),
            // the predicate goes on the ORDERING side: min_by/max_by skip
            // rows whose ordering is null, which is exactly "first/last
@@ -113,7 +110,7 @@ object GoldFeatures {
            // the subset).
            min_by(col("value"), when(col("hh") < 9, col("ts"))).as("pm_open"),
            max_by(col("value"), when(col("hh") < 9, col("ts"))).as("pm_last"),
-           (sum(when(col("hh") < 9, lqv(col("value")))).cast("double")
+           (sum(when(col("hh") < 9, Parity.lq(col("value")))).cast("double")
              / 100.0).as("pm_vol"),
            sum(when(col("hh") < 9, lit(1L))).as("pm_n"),
            max_by(col("value"),

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Parity, QueryDef, Tables}
+import graft.Parity.{det3, oDet3}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -615,12 +616,6 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_shap_linear",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
           "s2", "s12", "s22")
         val db0 = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
@@ -696,12 +691,6 @@ object MlPrepQueries {
            |WHERE f.event_id % 97 = 0""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val f = Tables.events(s, d).select(col("event_id"),
             col("event_type"),
             hour(col("ts")).cast("long").as("x1"),
@@ -757,21 +746,20 @@ object MlPrepQueries {
           .withColumnRenamed("tb1", "t1")
         val h2 = hist("x2", "b2", "mu2")
           .withColumnRenamed("tb2", "t2")
-        def q6(c: Column) = floor(c * lit(1e6) + lit(0.5)).cast("long")
         f.filter(col("event_id") % 97 === 0)
           .join(broadcast(bm), Seq("event_type"))
           .join(broadcast(h1), Seq("event_type"))
           .join(broadcast(h2), Seq("event_type"))
           .select(col("event_id"), col("event_type"), col("x1"),
             col("x2"),
-            q6(col("b0") + col("b1") * col("mu1")
-              + col("b2") * col("mu2")).as("base_q"),
-            q6(col("b1") * (col("x1").cast("double") - col("mu1")))
+            Parity.q(col("b0") + col("b1") * col("mu1")
+              + col("b2") * col("mu2"), 1e6).as("base_q"),
+            Parity.q(col("b1") * (col("x1").cast("double") - col("mu1")), 1e6)
               .as("phi1_q"),
-            q6(col("b2") * (col("x2").cast("double") - col("mu2")))
+            Parity.q(col("b2") * (col("x2").cast("double") - col("mu2")), 1e6)
               .as("phi2_q"),
-            q6(col("b0") + col("b1") * col("x1").cast("double")
-              + col("b2") * col("x2").cast("double")).as("pred_q"),
+            Parity.q(col("b0") + col("b1") * col("x1").cast("double")
+              + col("b2") * col("x2").cast("double"), 1e6).as("pred_q"),
             floor(col("t1").cast("double") / col("nn") + lit(0.5))
               .cast("long").as("mphi1_q"),
             floor(col("t2").cast("double") / col("nn") + lit(0.5))
@@ -931,10 +919,9 @@ object MlPrepQueries {
         val fin = en.withColumn("b0",
           col("sy") / col("nn") - col("b1") * col("s1") / col("nn")
             - col("b2") * col("s2") / col("nn"))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         fin.select(col("event_type"), col("lam"), col("n"),
-          q9(col("b0")).as("b0_q"), q9(col("b1")).as("b1_q"),
-          q9(col("b2")).as("b2_q"),
+          Parity.q(col("b0"), 1e9).as("b0_q"), Parity.q(col("b1"), 1e9).as("b1_q"),
+          Parity.q(col("b2"), 1e9).as("b2_q"),
           (when(col("b1") =!= 0.0, 1L).otherwise(0L)
             + when(col("b2") =!= 0.0, 1L).otherwise(0L)).as("nnz"),
           floor(((col("syy") - lit(2.0) * (col("b0") * col("sy")
@@ -1056,12 +1043,6 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_permutation_importance",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
           "s2", "s12", "s22")
         val db0 = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
@@ -1141,12 +1122,6 @@ object MlPrepQueries {
            |FROM sc, (SELECT unnest([1, 2]) AS feat)""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val f = Tables.events(s, d).select(col("event_type"),
           col("event_id"),
           hour(col("ts")).cast("long").as("x1"),
@@ -1216,16 +1191,15 @@ object MlPrepQueries {
           mseOf("s1y", "s2y", "s12").as("mse0"),
           mseOf("s1py", "s2y", "s1p2").as("mse1"),
           mseOf("s1y", "s2py", "s12p").as("mse2"))
-        def q6(c: Column) = floor(c * lit(1e6) + lit(0.5)).cast("long")
         sc.select(col("event_type"), col("n"),
             explode(array(lit(1L), lit(2L))).as("feature"),
             col("mse0"), col("mse1"), col("mse2"))
           .select(col("event_type"), col("n"), col("feature"),
-            q6(col("mse0")).as("mse_base_q"),
-            q6(when(col("feature") === 1L, col("mse1"))
-              .otherwise(col("mse2"))).as("mse_perm_q"),
-            q6(when(col("feature") === 1L, col("mse1"))
-              .otherwise(col("mse2")) - col("mse0")).as("delta_q"))
+            Parity.q(col("mse0"), 1e6).as("mse_base_q"),
+            Parity.q(when(col("feature") === 1L, col("mse1"))
+              .otherwise(col("mse2")), 1e6).as("mse_perm_q"),
+            Parity.q(when(col("feature") === 1L, col("mse1"))
+              .otherwise(col("mse2")) - col("mse0"), 1e6).as("delta_q"))
       }),
 
     // Leakage-safe K-fold TARGET ENCODING: each row's category is encoded
@@ -1548,8 +1522,6 @@ object MlPrepQueries {
         def ratio(num: Column, den: Column): Column =
           when(den === 0, 0.0).otherwise(num.cast("double") /
             den.cast("double"))
-        def q9(c: Column): Column =
-          floor(c * 1e9 + 0.5).cast("long")
         val p1 = ratio(col("tp"), col("tp") + col("fp"))
         val r1 = ratio(col("tp"), col("tp") + col("fn"))
         val p0 = ratio(col("tn"), col("tn") + col("fn"))
@@ -1564,9 +1536,13 @@ object MlPrepQueries {
             (lit(2.0) * col("np").cast("double") * col("nn").cast("double")))
         agg.select(col("period"), col("n"), col("tp"), col("fp"),
           col("fn"), col("tn"),
-          q9(p1).as("p1_q"), q9(r1).as("r1_q"), q9(f1(p1, r1)).as("f1_1_q"),
-          q9(p0).as("p0_q"), q9(r0).as("r0_q"), q9(f1(p0, r0)).as("f1_0_q"),
-          q9(auc).as("auc_q"))
+          Parity.q(p1, 1e9).as("p1_q"),
+          Parity.q(r1, 1e9).as("r1_q"),
+          Parity.q(f1(p1, r1), 1e9).as("f1_1_q"),
+          Parity.q(p0, 1e9).as("p0_q"),
+          Parity.q(r0, 1e9).as("r0_q"),
+          Parity.q(f1(p0, r0), 1e9).as("f1_0_q"),
+          Parity.q(auc, 1e9).as("auc_q"))
       }),
 
     // CALIBRATION: the reliability diagram next to eval_report's
@@ -1639,11 +1615,11 @@ object MlPrepQueries {
         val fracPos = col("pos").cast("double") / col("n").cast("double")
         val brier = col("sse").cast("double") /
           col("n").cast("double") / 10000.0
-        def q9(c: org.apache.spark.sql.Column) =
-          floor(c * 1e9 + 0.5).cast("long")
         b.select(col("bin"), col("n"),
-          q9(meanPred).as("mean_pred_q"), q9(fracPos).as("frac_pos_q"),
-          q9(abs(meanPred - fracPos)).as("gap_q"), q9(brier).as("brier_q"))
+          Parity.q(meanPred, 1e9).as("mean_pred_q"),
+          Parity.q(fracPos, 1e9).as("frac_pos_q"),
+          Parity.q(abs(meanPred - fracPos), 1e9).as("gap_q"),
+          Parity.q(brier, 1e9).as("brier_q"))
       }),
 
     // PSI feature-drift audit: Population Stability Index of `value`
@@ -1778,12 +1754,6 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_ols_normal",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
           "s2", "s12", "s22")
         val da = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
@@ -1829,12 +1799,6 @@ object MlPrepQueries {
            |FROM d""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val yq = graft.Parity.lq(col("value"))
         val f = Tables.events(s, d).select(col("event_type"),
           hour(col("ts")).cast("long").as("x1"),
@@ -1871,11 +1835,10 @@ object MlPrepQueries {
         val db2 = det3(col("nn"), col("s1"), col("sy"),
           col("s1"), col("s11"), col("s1y"),
           col("s2"), col("s12"), col("s2y"))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         dd.select(col("event_type"), col("n"),
-          q9(da / det).as("intercept_q"),
-          q9(db1 / det).as("b_hour_q"),
-          q9(db2 / det).as("b_dow_q"))
+          Parity.q(da / det, 1e9).as("intercept_q"),
+          Parity.q(db1 / det, 1e9).as("b_hour_q"),
+          Parity.q(db2 / det, 1e9).as("b_dow_q"))
       }),
 
     // RIDGE REGRESSION from the same sufficient statistics — the
@@ -1892,12 +1855,6 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_ridge",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         def coefs(lam: String, suffix: String): String = {
           val s11 = s"(s11 + $lam)"
           val s22 = s"(s22 + $lam)"
@@ -1950,12 +1907,6 @@ object MlPrepQueries {
            |FROM d""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val yq = graft.Parity.lq(col("value"))
         val f = Tables.events(s, d).select(col("event_type"),
           hour(col("ts")).cast("long").as("x1"),
@@ -1980,7 +1931,6 @@ object MlPrepQueries {
           (col("lyq").cast("double") / 100.0).as("sy"),
           (col("l1yq").cast("double") / 100.0).as("s1y"),
           (col("l2yq").cast("double") / 100.0).as("s2y"))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         def coefs(lam: Double, suffix: String): Seq[Column] = {
           val s11 = col("s11") + lit(lam)
           val s22 = col("s22") + lit(lam)
@@ -1996,9 +1946,9 @@ object MlPrepQueries {
           val db2 = det3(col("nn"), col("s1"), col("sy"),
             col("s1"), s11, col("s1y"),
             col("s2"), col("s12"), col("s2y"))
-          Seq(q9(da / det).as(s"intercept_q$suffix"),
-            q9(db1 / det).as(s"b_hour_q$suffix"),
-            q9(db2 / det).as(s"b_dow_q$suffix"))
+          Seq(Parity.q(da / det, 1e9).as(s"intercept_q$suffix"),
+            Parity.q(db1 / det, 1e9).as(s"b_hour_q$suffix"),
+            Parity.q(db2 / det, 1e9).as(s"b_dow_q$suffix"))
         }
         dd.select(Seq(col("event_type"), col("n")) ++
           coefs(0.0, "_ols") ++ coefs(1000.0, "_r3") ++
@@ -2086,12 +2036,6 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_logit",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         val det = oDet3("h00", "h01", "h02", "h01", "h11", "h12",
           "h02", "h12", "h22")
         val d0 = oDet3("g0", "h01", "h02", "g1", "h11", "h12",
@@ -2199,7 +2143,7 @@ object MlPrepQueries {
       },
       (s, d) => {
         // all four IRLS steps + the tie-correct train AUC run inside
-        // ONE typed aggregate (functions/LogitFitNative.LogitFit4) over
+        // ONE typed aggregate (functions.LogitFit4) over
         // the cell grid — identical IEEE step arithmetic to the
         // original per-step moment/Cramer projection formulation (the
         // oracle still runs it as unrolled CTEs; unchanged hashes prove
@@ -2335,7 +2279,7 @@ object MlPrepQueries {
       },
       (s, d) => {
         // the whole depth-3 search is ONE typed aggregate over the cell
-        // grid (functions/TreeFitNative.TreeFit3) — identical IEEE
+        // grid (functions.TreeFit3) — identical IEEE
         // split arithmetic to the original three-level window/broadcast
         // formulation (which the oracle still runs as unrolled CTEs;
         // unchanged hashes prove the identity), but two exec stages
@@ -2381,12 +2325,6 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_sweep",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         val s11l = "(s11 + lam)"
         val s22l = "(s22 + lam)"
         val det = oDet3("nn", "s1", "s2", "s1", s11l, "s12",
@@ -2482,12 +2420,6 @@ object MlPrepQueries {
       },
       (s, d) => {
         import graft.operators.TextOps.hash32
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val f = Tables.events(s, d).select(col("event_type"),
           (hash32(concat(lit("cv:"), col("event_id").cast("string")))
             % 5).as("fold"),
@@ -2551,7 +2483,6 @@ object MlPrepQueries {
           col("s1"), s11l, col("s1y"), col("s2"), col("s12"), col("s2y"))
         val sol = tr.withColumn("b0", db0 / det)
           .withColumn("b1", db1 / det).withColumn("b2", db2 / det)
-        def q7(c: Column) = floor(c * lit(1e7) + lit(0.5)).cast("long")
         val sse = col("qyy") - lit(2.0) * (col("b0") * col("qy")
             + col("b1") * col("q1y") + col("b2") * col("q2y")) +
           (col("b0") * col("b0") * col("qn")
@@ -2562,8 +2493,8 @@ object MlPrepQueries {
               + col("b1") * col("b2") * col("q12")))
         val ev = sol.select(col("event_type"), col("fold"), col("lam"),
           col("n_train"), col("n_test"),
-          q7(col("b0")).as("b0_q"), q7(col("b1")).as("b1_q"),
-          q7(col("b2")).as("b2_q"),
+          Parity.q(col("b0"), 1e7).as("b0_q"), Parity.q(col("b1"), 1e7).as("b1_q"),
+          Parity.q(col("b2"), 1e7).as("b2_q"),
           floor(sse / nullif(col("n_test"), lit(0L)).cast("double")
             + lit(0.5)).cast("long").as("mse_q"))
         val win = ev.groupBy("event_type", "lam")
@@ -2604,12 +2535,6 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_walk_forward",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
           "s2", "s12", "s22")
         val db0 = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
@@ -2703,12 +2628,6 @@ object MlPrepQueries {
            |FROM sol""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val f = Tables.events(s, d).select(col("event_type"),
           to_date(col("ts")).as("day"),
           hour(col("ts")).cast("long").as("x1"),
@@ -2803,11 +2722,10 @@ object MlPrepQueries {
                 + col("b1") * col("b2") * col(x12)))) /
             nullif(col(cnt), lit(0.0))
         def q0(c: Column) = floor(c + lit(0.5)).cast("long")
-        def q7(c: Column) = floor(c * lit(1e7) + lit(0.5)).cast("long")
         sol.select(col("event_type"), col("split_id"), col("train_start"),
           col("train_end"), col("test_end"), col("n_train"), col("n_test"),
-          q7(col("b0")).as("b0_q"), q7(col("b1")).as("b1_q"),
-          q7(col("b2")).as("b2_q"),
+          Parity.q(col("b0"), 1e7).as("b0_q"), Parity.q(col("b1"), 1e7).as("b1_q"),
+          Parity.q(col("b2"), 1e7).as("b2_q"),
           q0(mseOf("syy", "sy", "s1y", "s2y", "nn", "s11", "s22",
             "s1", "s2", "s12", "scnt")).as("train_mse_q"),
           q0(mseOf("qyy", "qy", "q1y", "q2y", "qn", "q11", "q22",
@@ -2945,7 +2863,7 @@ object MlPrepQueries {
       },
       (s, d) => {
         // all four boosting rounds run inside ONE typed aggregate
-        // (functions/GbtFitNative.GbtFit4) over the cell grid —
+        // (functions.GbtFit4) over the cell grid —
         // identical IEEE round arithmetic to the original per-round
         // projection/window/persist formulation (which the oracle still
         // runs as unrolled CTEs; unchanged hashes prove the identity),
@@ -3131,7 +3049,7 @@ object MlPrepQueries {
         // stay data-sized work in the grid build (one map-side-combined
         // scan); everything after the grid — per-tree stump search, OOB
         // AUC, ensemble AUC — runs inside ONE typed aggregate
-        // (functions/ForestFitNative.ForestFit8) replaying the identical
+        // (functions.ForestFit8) replaying the identical
         // IEEE arithmetic of the original window/join formulation (the
         // oracle still runs it as unrolled CTEs; unchanged hashes prove
         // the identity)
@@ -3192,12 +3110,6 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_forward_select",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         // single-feature fit on (sj, sjj, sjy): SSE via the 2×2 solve
         def sse1(j: Int): String = {
           val (sj, sjj, sjy) = (s"s$j", s"s$j$j", s"s${j}y")
@@ -3312,12 +3224,6 @@ object MlPrepQueries {
            |FROM steps""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val f = Tables.events(s, d).select(col("event_type"),
           hour(col("ts")).cast("long").as("x1"),
           dayofweek(col("ts")).cast("long").as("x2"),
@@ -3835,14 +3741,13 @@ object MlPrepQueries {
               + col("v3") * col("w3")) /
             (col("v1") * col("v1") + col("v2") * col("v2")
               + col("v3") * col("v3")))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         fin.select(col("event_type"), col("n"),
-          q9(col("eig")).as("eig_q"),
-          q9(col("eig") / (col("c11") + col("c22") + col("c33")))
+          Parity.q(col("eig"), 1e9).as("eig_q"),
+          Parity.q(col("eig") / (col("c11") + col("c22") + col("c33")), 1e9)
             .as("evr_q"),
-          q9(col("v1") / col("nrm") * col("sg")).as("v1_q"),
-          q9(col("v2") / col("nrm") * col("sg")).as("v2_q"),
-          q9(col("v3") / col("nrm") * col("sg")).as("v3_q"))
+          Parity.q(col("v1") / col("nrm") * col("sg"), 1e9).as("v1_q"),
+          Parity.q(col("v2") / col("nrm") * col("sg"), 1e9).as("v2_q"),
+          Parity.q(col("v3") / col("nrm") * col("sg"), 1e9).as("v3_q"))
       }),
 
     // LEARNING CURVE — sklearn's `learning_curve` (the train-size
@@ -4022,10 +3927,10 @@ object MlPrepQueries {
           (col("sn") * col("sxx") - col("sx") * col("sx"))
         val fit = pick.withColumn("b", b)
           .withColumn("a", (col("sy") - col("b") * col("sx")) / col("sn"))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         fit.select(col("event_type"), col("frac"), col("train_days"),
           col("test_days"), col("n_train"), col("n_test"),
-          q9(col("b")).as("slope_q"), q9(col("a")).as("intercept_q"),
+          Parity.q(col("b"), 1e9).as("slope_q"),
+          Parity.q(col("a"), 1e9).as("intercept_q"),
           floor((col("qyy") - lit(2.0) * (col("a") * col("qy")
               + col("b") * col("qxy"))
             + (col("a") * col("a") * col("qn")
@@ -4148,14 +4053,14 @@ object MlPrepQueries {
             .otherwise(col("tp") / (col("tp") + col("fp"))))
           .withColumn("r1", when(col("tp") + col("fnn") === 0.0, lit(0.0))
             .otherwise(col("tp") / (col("tp") + col("fnn"))))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         f.select(col("event_type"), col("strategy"), col("n_train"),
           col("pos_train"), col("n_test"), col("pos_test"),
-          q9(col("acc")).as("acc_q"), q9(col("p1")).as("p1_q"),
-          q9(col("r1")).as("r1_q"),
-          q9(when(col("p1") + col("r1") === 0.0, lit(0.0))
+          Parity.q(col("acc"), 1e9).as("acc_q"),
+          Parity.q(col("p1"), 1e9).as("p1_q"),
+          Parity.q(col("r1"), 1e9).as("r1_q"),
+          Parity.q(when(col("p1") + col("r1") === 0.0, lit(0.0))
             .otherwise(lit(2.0) * col("p1") * col("r1")
-              / (col("p1") + col("r1")))).as("f1_q"))
+              / (col("p1") + col("r1"))), 1e9).as("f1_q"))
       }),
 
     // MODEL REGISTRY AS A QUERYABLE TABLE — the reference's model-export
@@ -4180,12 +4085,6 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_registry",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
           "s2", "s12", "s22")
         val db0 = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
@@ -4254,12 +4153,6 @@ object MlPrepQueries {
           .stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val base = graft.Sinks.dir(s, "mlprep_registry", d)
         // fresh registry per invocation — re-runs must re-derive v1/v2,
         // not stack v3/v4 onto a previous run's table
@@ -4333,12 +4226,12 @@ object MlPrepQueries {
             floor(pred * lit(1e6) + lit(0.5)).cast("long").as("pq"))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_scored"), sum("pq").as("pred_sum_q"))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         listing.join(broadcast(scored), Seq("event_type"), "left")
           .select(col("model_name"), col("version"), col("event_type"),
             col("n_train"),
-            q9(col("b0")).as("b0_q"), q9(col("b1")).as("b1_q"),
-            q9(col("b2")).as("b2_q"), col("is_latest"),
+            Parity.q(col("b0"), 1e9).as("b0_q"),
+            Parity.q(col("b1"), 1e9).as("b1_q"),
+            Parity.q(col("b2"), 1e9).as("b2_q"), col("is_latest"),
             when(col("is_latest") === 1L, col("n_scored")).as("n_scored"),
             when(col("is_latest") === 1L, col("pred_sum_q"))
               .as("pred_sum_q"))

@@ -362,8 +362,8 @@ object PipelineQueries {
                   col("ewm"))),
 
     // W12/EWM (native Catalyst form) — the custom AggregateWindowFunction
-    // (graft.functions.EwmNr) registered via the session registry /
-    // SparkSessionExtensions and invoked through SQL. Same recurrence as
+    // (graft.functions.EwmNr) injected by GraftExtensions and invoked
+    // through SQL. Same recurrence as
     // pl4 (spec-asserted bit-equal); recursion is not SQL-window
     // expressible, so rows-only for the oracle.
     QueryDef(
@@ -381,12 +381,9 @@ object PipelineQueries {
              |    0.1 * o.value + (1.0 - 0.1) * r.ewm AS ewm
              |  FROM o JOIN r ON o.user_id = r.user_id AND o.rn = r.rn + 1)
              |SELECT event_id, user_id, ts, value, ewm FROM r""".stripMargin),
-      (s, d) => {
-        graft.functions.EwmNative.register(s)
-        Tables.events(s, d).selectExpr(
-          "event_id", "user_id", "ts", "value",
-          "ewm_nr(value, 0.1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS ewm")
-      }),
+      (s, d) => Tables.events(s, d).selectExpr(
+        "event_id", "user_id", "ts", "value",
+        "ewm_nr(value, 0.1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS ewm")),
 
     // TREND EVENTS — the path-dependent threshold-crossing state machine
     // (my_alpaca.py:19-111); inherently sequential per key → no SQL oracle.

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Sinks, Tables}
+import graft.Parity.{det3, oDet3}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1436,12 +1437,6 @@ object StreamingQueries {
     QueryDef(
       "st15_stream_score",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
           "s2", "s12", "s22")
         val db0 = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
@@ -1505,12 +1500,6 @@ object StreamingQueries {
            |  AND s.era = bb.model_version""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val base = Sinks.dir(s, "stream_score", d)
         reset(s, base)
         val srcDir = s"$base/src"

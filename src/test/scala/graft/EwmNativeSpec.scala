@@ -1,12 +1,10 @@
 package graft
 
-import graft.functions.EwmNative
 import graft.operators.Ewm
 
 class EwmNativeSpec extends SparkSpec {
 
   test("native window expression matches hand recurrence") {
-    EwmNative.register(spark)
     val df = spark.createDataFrame(Seq(
       (1L, ts("2024-01-01 00:00:01"), 10.0),
       (1L, ts("2024-01-01 00:00:02"), 20.0),
@@ -20,7 +18,6 @@ class EwmNativeSpec extends SparkSpec {
   }
 
   test("native expression is bit-equal to the flatMapGroups implementation") {
-    EwmNative.register(spark)
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     val a = ev.selectExpr("user_id", "ts",
         "ewm_nr(value, 0.1) OVER (PARTITION BY user_id ORDER BY ts) AS y")

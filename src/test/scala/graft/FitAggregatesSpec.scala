@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * multiset and every eval iteration runs over sorted maps, so
   * partial-buffer ARRIVAL ORDER must not matter. This spec drives each
   * aggregate through radically different physical layouts (1 partition
-  * vs 13 partitions vs reversed input order) and asserts bit-identical
-  * results — the property that makes the fused rows replayable at any
-  * cluster parallelism.
+  * vs 13 partitions vs reversed input order, plus rows with a null input
+  * that must be skipped) and asserts bit-identical results — the
+  * property that makes the fused rows replayable at any cluster
+  * parallelism.
   */
 class FitAggregatesSpec extends SparkSpec {
 
@@ -36,15 +37,23 @@ class FitAggregatesSpec extends SparkSpec {
         case other => String.valueOf(other)
       }).sortBy(_.mkString("|")).map(_.asInstanceOf[Seq[Any]]).toSeq
 
-  private def layouts(df: DataFrame): Seq[DataFrame] = Seq(
-    df.coalesce(1),
-    df.repartition(13, col("x1")),
-    df.orderBy(col("x2").desc, col("x1").desc).coalesce(2))
+  // the last layout adds, per input column, copies of the x2 = 1 rows
+  // with that column null: the shared FitAggregate update must skip
+  // them, so it too gives the null-free grid's result
+  private def layouts(df: DataFrame, inputs: Seq[String]): Seq[DataFrame] =
+    Seq(
+      df.coalesce(1),
+      df.repartition(13, col("x1")),
+      df.orderBy(col("x2").desc, col("x1").desc).coalesce(2),
+      inputs.foldLeft(df) { (acc, c) =>
+        acc.unionByName(df.filter(col("x2") === 1L)
+          .withColumn(c, lit(null).cast("long")))
+      }.repartition(5))
 
   test("tree_fit3 / gbt_fit4 / logit_fit4 are layout-invariant") {
     for (agg <- Seq("tree_fit3(x1, x2, n, yc)", "gbt_fit4(x1, x2, n, yc)",
                     "logit_fit4(x1, x2, n, yc)")) {
-      val results = layouts(cells).map(run(agg, _))
+      val results = layouts(cells, Seq("x1", "x2", "n", "yc")).map(run(agg, _))
       assert(results.distinct.size == 1,
         s"$agg: results differ across physical layouts")
       assert(results.head.nonEmpty)
@@ -61,7 +70,9 @@ class FitAggregatesSpec extends SparkSpec {
         (col("yc") / 2).cast("long").as("p0"),
         (col("n") + 1).as("cnt"), col("yc").as("cy"))
     val agg = "forest_fit8(tree, feat, x1, x2, wn, wy, c0, p0, cnt, cy)"
-    val results = layouts(f).map(run(agg, _))
+    val inputs = Seq("tree", "feat", "x1", "x2", "wn", "wy", "c0", "p0",
+      "cnt", "cy")
+    val results = layouts(f, inputs).map(run(agg, _))
     assert(results.distinct.size == 1,
       "forest_fit8: results differ across physical layouts")
     assert(results.head.nonEmpty)

@@ -1,9 +1,10 @@
 package graft
 
+import graft.functions.TrainerNative
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The native trainer expressions (graft.functions.TrainerNative) must be
+/** The native trainer primitives (graft.functions.TrainerNative) must be
   * BIT-IDENTICAL to the unrolled projection chains they replace — that is
   * the whole parity contract (the DuckDB oracles still run the chains).
   * These tests evaluate both formulations over the same frames and compare
@@ -26,11 +27,11 @@ class TrainerNativeSpec extends SparkSpec {
       while (i < 16) { cur = cur.withColumn("e", col("e") * col("e")); i += 1 }
       cur.withColumn("p", lit(1.0) / (lit(1.0) + col("e")))
     }
-    val both = chain(df)
-      .withColumn("pn", call_function("sigmoid_r16", col("z")))
-      .select("z", "p", "pn").collect()
-    for (r <- both) {
-      val (z, p, pn) = (r.getDouble(0), r.getDouble(1), r.getDouble(2))
+    val rows = chain(df).select("z", "p").collect()
+    assert(rows.length == zs.length)
+    for (r <- rows) {
+      val (z, p) = (r.getDouble(0), r.getDouble(1))
+      val pn = TrainerNative.sigmoidR16(z)
       assert(java.lang.Double.doubleToRawLongBits(p) ==
         java.lang.Double.doubleToRawLongBits(pn),
         s"z=$z: chain $p vs native $pn")
